@@ -70,9 +70,7 @@ def _cmd_queries(args) -> int:
         fn, _oracle = QUERIES[args.explain]
         spark = _session(args)
         df = fn(spark, args.sf_dir)
-        print(df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        ))
+        df.explain(mode="formatted")
         return 0
     for name, (_fn, oracle) in QUERIES.items():
         if args.oracled_only and oracle is None:

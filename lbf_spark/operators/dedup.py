@@ -22,6 +22,16 @@ from pyspark.sql import DataFrame, functions as F
 
 TOKEN_RE = "[^a-z0-9]+"
 
+#: _indexed_pair_counts broadcasts the inverted index when the
+#: optimizer's size estimate of it is at or under this many bytes (-1
+#: forces the pair-exchange shape).
+INDEX_BROADCAST_BYTES = 256 << 20
+
+#: dup_clusters broadcasts its node frames into the propagation joins
+#: when the component graph has at most this many nodes (-1 forces the
+#: shuffle-join rounds).
+CLUSTER_BROADCAST_NODES = 2_000_000
+
 # Frames persisted by jaccard_pairs, oldest first. The results are
 # lazy, so the function cannot unpersist its own intermediates; callers
 # that run MANY dedup passes in one session release them explicitly.
@@ -39,7 +49,11 @@ def release_caches() -> int:
     how many were released. Call after the consuming action(s) of a
     dedup pass complete — the scoped-ownership answer to the default
     session-lifetime persist (`spark.catalog.clearCache()` also works
-    but nukes unrelated caches — and does NOT free checkpoint blocks)."""
+    but nukes unrelated caches — and does NOT free checkpoint blocks).
+
+    Acting on a ``dup_clusters`` labels frame after its release fails:
+    its blocks are gone and its local checkpoint truncated the lineage
+    that could recompute them."""
     from lbf_spark.util import free_local_checkpoint
 
     n = 0
@@ -328,7 +342,7 @@ def _indexed_pair_counts(
     Physical-plan dispatch (results identical either way), decided
     from the OPTIMIZER'S size estimate of the index frame (driver-side
     plan stats, nothing executes): when the estimate is under
-    ``$LBF_INDEX_BROADCAST_BYTES`` (default 256 MB), the index side is
+    ``INDEX_BROADCAST_BYTES`` (256 MB), the index side is
     broadcast EXPLICITLY and the stream side is hash-partitioned by
     its doc id: every constructed pair (a, b) then lands in the
     partition owning the stream doc, the count aggregation's
@@ -388,18 +402,10 @@ def _indexed_pair_counts(
             .agg(*aggs)
         )
 
-    import os
+    from lbf_spark.util import optimizer_size_bytes
 
-    try:
-        est = int(
-            inv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = None
-    limit = int(
-        os.environ.get("LBF_INDEX_BROADCAST_BYTES", str(256 * 1024 * 1024))
-    )
-    if est is not None and 0 <= est <= limit:
+    est = optimizer_size_bytes(inv)
+    if est is not None and 0 <= est <= INDEX_BROADCAST_BYTES:
         carry = carry_size_col is not None
         # x streams hash-partitioned by id; y is the broadcast index
         return _shape(
@@ -988,19 +994,14 @@ def dup_clusters(
     # Node frames (labels, per-node neighbor minima) are usually tiny
     # next to the edge list; when the MEASURED node count (free — the
     # checkpoint just materialized labels) is under
-    # $LBF_CLUSTER_BROADCAST_NODES, broadcast them into both per-round
+    # CLUSTER_BROADCAST_NODES, broadcast them into both per-round
     # joins: the edge list is then never re-shuffled or sorted — one
     # small per-node exchange per round instead of three exchanges +
     # four sorts (checkpointed RDDs lose their partitioning under AQE,
     # so co-partitioning cannot be pinned across rounds; measured r7).
     # Components with more nodes than the threshold keep the
     # shuffle-join rounds — the 100-TB shape.
-    import os as _os
-
-    n_nodes = labels.count()
-    bcast = n_nodes <= int(
-        _os.environ.get("LBF_CLUSTER_BROADCAST_NODES", "2000000")
-    )
+    bcast = labels.count() <= CLUSTER_BROADCAST_NODES
     _b = F.broadcast if bcast else (lambda f: f)
 
     def _one_step(lbls: DataFrame, keep_prev: str | None) -> DataFrame:

@@ -199,15 +199,12 @@ def write_table(
         # scan's split count (guide §6 output sizing). A caller that
         # already shuffled (repartition/groupBy upstream) has chosen
         # its layout — leave it alone (same plan-string probe as
-        # util.fan_out; nothing executes).
-        from lbf_spark.util import _FULL_PARALLEL_MARKERS
+        # util.fan_out; nothing executes). A failed probe leaves the
+        # layout alone too.
+        from lbf_spark.util import executed_plan, spread_by_shuffle
 
-        try:
-            _plan = pdf._jdf.queryExecution().executedPlan().toString().lower()
-            _spread = any(m in _plan for m in _FULL_PARALLEL_MARKERS)
-        except Exception:
-            _spread = True  # probe failed: preserve old behavior
-        if not _spread:
+        plan = executed_plan(pdf)
+        if plan is not None and not spread_by_shuffle(plan):
             pdf = pdf.repartition("entity_bucket", "ts_day")
     added = _land_data_files(spark, pdf, path)
     if _layout_cache is not None:
@@ -245,13 +242,6 @@ def write_table(
     _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, added)
     return snapshot
 
-
-#: write-path physical mode: "staged" (stage-then-adopt — the safe
-#: default: exactly-once under retry/concurrency) or "direct" (the
-#: pre-r5 semantics: write straight into data/ and dir-diff for the
-#: added list — UNSAFE under concurrent writers/retries; retained ONLY
-#: as the control arm of the staged-write A/B benchmark).
-LAND_MODE = "staged"
 
 class ExpectationsError(RuntimeError):
     """A quality-gated write refused to land: one or more expectations
@@ -306,64 +296,7 @@ def write_table_gated(
     return write_table(df, path, extra=extra, **kw)
 
 
-#: component timings (seconds) of the most recent write_table /
-#: merge_upsert on this driver: {"land": …, "stats": …, "commit": …}.
-#: Observability for the bench decomposition; not a public API.
-LAST_WRITE_PROFILE: dict = {}
-
-#: running totals of the same components since the last reset — the
-#: staged-write A/B sums a whole multi-write workload with these.
-WRITE_PROFILE_TOTALS: dict = {}
-
-
-def reset_write_profile() -> None:
-    LAST_WRITE_PROFILE.clear()
-    WRITE_PROFILE_TOTALS.clear()
-
-
-def _prof(key: str, dt: float) -> None:
-    LAST_WRITE_PROFILE[key] = round(dt, 4)
-    WRITE_PROFILE_TOTALS[key] = round(
-        WRITE_PROFILE_TOTALS.get(key, 0.0) + dt, 4
-    )
-
-
 def _land_data_files(spark, pdf: DataFrame, path: str) -> list[str]:
-    import time as _time
-
-    t0 = _time.time()
-    try:
-        if LAND_MODE == "direct":
-            return _land_data_files_direct(spark, pdf, path)
-        return _land_data_files_staged(spark, pdf, path)
-    finally:
-        _prof("land", _time.time() - t0)
-        LAST_WRITE_PROFILE["mode"] = LAND_MODE
-
-
-def _land_data_files_direct(spark, pdf: DataFrame, path: str) -> list[str]:
-    """Control arm of the staged-write A/B: append parquet directly
-    into ``data/`` and compute the added list as a before/after dir
-    diff (round-4 behavior). Measures the pure land cost without the
-    adopt moves; NOT safe under concurrent writers or retried jobs —
-    benchmark use only (see LAND_MODE)."""
-    from lbf_spark import fsio
-
-    data_dir = fsio.join(path, "data")
-    before = {
-        f["path"]
-        for f in fsio.list_files_recursive(spark, data_dir, ".parquet")
-    } if fsio.exists(spark, data_dir) else set()
-    pdf.write.mode("append").partitionBy("entity_bucket", "ts_day").parquet(
-        data_dir
-    )
-    after = [
-        f["path"] for f in fsio.list_files_recursive(spark, data_dir, ".parquet")
-    ]
-    return sorted(p for p in after if p not in before)
-
-
-def _land_data_files_staged(spark, pdf: DataFrame, path: str) -> list[str]:
     """Stage-then-adopt data write: land the partitioned parquet under a
     unique ``.staging/<token>`` dir, move exactly those part files into
     ``data/`` (same partition-relative path — Spark's per-job UUID in
@@ -406,18 +339,6 @@ def _land_data_files_staged(spark, pdf: DataFrame, path: str) -> list[str]:
 def _commit_or_cleanup(
     spark, manifest_path: str, snapshot: dict, path: str, added: list[str]
 ) -> None:
-    import time as _time
-
-    t0 = _time.time()
-    try:
-        _commit_or_cleanup_inner(spark, manifest_path, snapshot, path, added)
-    finally:
-        _prof("commit", _time.time() - t0)
-
-
-def _commit_or_cleanup_inner(
-    spark, manifest_path: str, snapshot: dict, path: str, added: list[str]
-) -> None:
     """Exclusive manifest commit; on losing the snapshot-id race,
     best-effort delete the data files this attempt already moved into
     ``data/`` so a retry starts clean, then raise ConcurrentWriteError."""
@@ -440,16 +361,6 @@ def _commit_or_cleanup_inner(
 _HOT_STATS_K = 8  # per-file hot-entity entries kept in the manifest
 
 
-def _file_ts_stats(spark, data_dir: str, files: list[str]) -> dict:
-    import time as _time
-
-    t0 = _time.time()
-    try:
-        return _file_ts_stats_inner(spark, data_dir, files)
-    finally:
-        _prof("stats", _time.time() - t0)
-
-
 #: driver-side stats fast path: total added bytes at or under this run
 #: the per-file stats scan in the driver with pyarrow (no Spark job —
 #: ~10 ms vs ~0.2-0.3 s of pure job-scheduling overhead for a
@@ -462,7 +373,7 @@ STATS_DRIVER_BYTES = 32 * 1024 * 1024
 def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
     """Bit-identical driver-side implementation of the per-file stats
     for SMALL LOCAL writes, or None to use the Spark read-back.
-    Matches ``_file_ts_stats_inner`` exactly: empty files are omitted,
+    Matches ``_file_ts_stats`` exactly: empty files are omitted,
     null entities count toward n_rows/ts bounds but never rank, the
     hot map holds the top-8 entities by (count desc, str(entity) asc),
     keys are the string cast. Equality with the Spark job is pinned by
@@ -478,10 +389,9 @@ def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
         return None
     else:
         base = data_dir
-    limit = int(_os.environ.get("LBF_STATS_DRIVER_BYTES", STATS_DRIVER_BYTES))
     paths = [_os.path.join(base, f) for f in files]
     try:
-        if sum(_os.path.getsize(p) for p in paths) > limit:
+        if sum(_os.path.getsize(p) for p in paths) > STATS_DRIVER_BYTES:
             return None
     except OSError:
         return None
@@ -525,7 +435,7 @@ def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
     return out
 
 
-def _file_ts_stats_inner(spark, data_dir: str, files: list[str]) -> dict:
+def _file_ts_stats(spark, data_dir: str, files: list[str]) -> dict:
     """Per-added-file column stats — the Iceberg per-file stats that
     make FILE skipping (not just partition pruning) work, plus row
     counts and a top-K per-entity count sketch for skew planning. One

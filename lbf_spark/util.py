@@ -14,6 +14,33 @@ _FULL_PARALLEL_MARKERS = (
 )
 
 
+def executed_plan(df: DataFrame) -> str | None:
+    """Lower-cased ``executedPlan`` string of ``df``, or None when the
+    private py4j probe fails. Building the AdaptiveSparkPlan wrapper
+    executes nothing (``isFinalPlan=false``), and unlike ``sparkPlan``
+    it INCLUDES the exchanges EnsureRequirements inserts."""
+    try:
+        return df._jdf.queryExecution().executedPlan().toString().lower()
+    except Exception:
+        return None
+
+
+def spread_by_shuffle(plan: str) -> bool:
+    """True when an ``executed_plan`` string holds a hash, range or
+    round-robin exchange, i.e. the rows already reach many tasks."""
+    return any(m in plan for m in _FULL_PARALLEL_MARKERS)
+
+
+def optimizer_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` estimate of ``df`` (driver-side
+    plan statistics; nothing executes), or None when the private py4j
+    probe fails."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin repartition when the incoming plan has fewer
     partitions than the cluster has cores.
@@ -28,12 +55,10 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     partitions for retry safety). At warehouse scale inputs are
     many-file and this is a no-op.
 
-    Plan dispatch (version-tolerant, probed on the ``executedPlan``
-    string — building the AdaptiveSparkPlan wrapper executes nothing
-    (``isFinalPlan=false``), and unlike ``sparkPlan`` it INCLUDES the
-    exchanges EnsureRequirements inserts, so aggregate/join plans are
-    recognized instead of falling through to the ``df.rdd`` probe,
-    which would materialize their shuffle stages at plan-build time):
+    Plan dispatch (version-tolerant, probed on the ``executed_plan``
+    string, so aggregate/join plans are recognized instead of falling
+    through to the ``df.rdd`` probe, which would materialize their
+    shuffle stages at plan-build time):
 
     - hash/range/round-robin exchange anywhere → returned untouched
       (the shuffle already provides full parallelism downstream);
@@ -64,11 +89,10 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
             return df.repartition(target)
         return df
 
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    except Exception:
+    plan = executed_plan(df)
+    if plan is None:
         return _files_fallback()
-    if any(m in plan for m in _FULL_PARALLEL_MARKERS):
+    if spread_by_shuffle(plan):
         return df
     if "singlepartition" in plan:
         return df.repartition(target)
@@ -86,11 +110,13 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     (a ``LogicalRDD`` plan). The frame's data is UNRECOVERABLE
     afterwards — local checkpoints truncate the recompute lineage — so
     only call on frames nothing will act on again (a superseded
-    iteration round, a released scope). Returns False (doing nothing)
-    when the plan is not a LogicalRDD, e.g. a RELIABLE ``checkpoint``
-    (its DFS files are owned by the checkpoint-dir lifecycle, not block
-    storage). This is the release half of the iterative-algorithm
-    lineage-truncation rule (CLAUDE.md): without it every round's
+    iteration round, a released scope). Returns True only when the
+    backing RDD was actually persisted; returns False (doing nothing)
+    when the plan is not a LogicalRDD or its RDD holds no storage
+    level, e.g. a RELIABLE ``checkpoint`` (its DFS files are owned by
+    the checkpoint-dir lifecycle, not block storage). This is the
+    release half of the iterative-algorithm lineage-truncation rule
+    (CLAUDE.md): without it every round's
     node-sized blocks (and each bench repeat's edge list) stay resident
     until the session dies — measured r7: the q55@10x pair stage's CPU
     grew 246 → 566 s across three same-JVM repeats from the
@@ -99,7 +125,10 @@ def free_local_checkpoint(df: DataFrame) -> bool:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
             return False
-        plan.rdd().unpersist(False)
+        rdd = plan.rdd()
+        if not rdd.getStorageLevel().isValid():
+            return False
+        rdd.unpersist(False)
         return True
     except Exception:
         return False

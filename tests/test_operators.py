@@ -27,6 +27,37 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
+def index_gate_arms(monkeypatch):
+    """Run the loop body once per arm of the inverted-index size gate,
+    each forced: 2**63-1 broadcasts the index, -1 keeps the pair
+    exchange (and the shuffled-candidate verify). The default threshold
+    pins neither arm here: the optimizer estimates an uncached explode
+    at ~6.6e18 B and its cached copy at a few hundred bytes, so the arm
+    flips with cache state. Asserts each iteration ran its arm."""
+    real = dedup._indexed_pair_counts
+    for limit, want in (((1 << 63) - 1, True), (-1, False)):
+        regimes = []
+
+        def spy(*a, **kw):
+            out = real(*a, **kw)
+            regimes.append(out[1])
+            return out
+
+        monkeypatch.setattr(dedup, "INDEX_BROADCAST_BYTES", limit)
+        monkeypatch.setattr(dedup, "_indexed_pair_counts", spy)
+        yield
+        assert regimes and all(r is want for r in regimes), (limit, regimes)
+
+
+def cluster_gate_arms(monkeypatch):
+    """Run the loop body with dup_clusters' node-broadcast gate at its
+    default (broadcast rounds at fixture size), then at -1 (shuffle-
+    join rounds)."""
+    for limit in (dedup.CLUSTER_BROADCAST_NODES, -1):
+        monkeypatch.setattr(dedup, "CLUSTER_BROADCAST_NODES", limit)
+        yield
+
+
 def test_exact_dedup(spark, docs):
     got = dedup.exact_dedup(docs, "doc_id", "text").toPandas()
     dup_groups = got[got.n_copies > 1]
@@ -34,24 +65,26 @@ def test_exact_dedup(spark, docs):
     assert dup_groups.iloc[0]["keeper_id"] == 1 and dup_groups.iloc[0]["n_copies"] == 2
 
 
-def test_jaccard_pairs_exact(spark, docs):
-    got = dedup.jaccard_pairs(
-        dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.5
-    ).toPandas()
-    pairs = {(r.id_a, r.id_b): r.jaccard for r in got.itertuples()}
-    assert pairs[(1, 3)] == 1.0
-    # doc 2 differs in last word: shingles 7, shared 6 → 6/8 = 0.75
-    assert abs(pairs[(1, 2)] - 0.75) < 1e-12
-    assert (4, 5) not in pairs
+def test_jaccard_pairs_exact(spark, docs, monkeypatch):
+    for _ in index_gate_arms(monkeypatch):
+        got = dedup.jaccard_pairs(
+            dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.5
+        ).toPandas()
+        pairs = {(r.id_a, r.id_b): r.jaccard for r in got.itertuples()}
+        assert pairs[(1, 3)] == 1.0
+        # doc 2 differs in last word: shingles 7, shared 6 → 6/8 = 0.75
+        assert abs(pairs[(1, 2)] - 0.75) < 1e-12
+        assert (4, 5) not in pairs
 
 
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    got = dedup.minhash_dedup_pairs(
-        docs, num_hashes=16, bands=8, threshold=0.7
-    ).toPandas()
-    found = {(r.id_a, r.id_b) for r in got.itertuples()}
-    assert (1, 3) in found and (1, 2) in found and (2, 3) in found
-    assert all(a < b for a, b in found)
+def test_minhash_lsh_finds_near_dups(spark, docs, monkeypatch):
+    for _ in index_gate_arms(monkeypatch):
+        got = dedup.minhash_dedup_pairs(
+            docs, num_hashes=16, bands=8, threshold=0.7
+        ).toPandas()
+        found = {(r.id_a, r.id_b) for r in got.itertuples()}
+        assert (1, 3) in found and (1, 2) in found and (2, 3) in found
+        assert all(a < b for a, b in found)
 
 
 def test_simhash_dup_detection(spark, docs):
@@ -348,7 +381,7 @@ def test_peter_ulz_coverage_hand_case(spark):
         assert r["cov"] == 0.25 * exp.get(r["bucket"], 0.0)
 
 
-def test_jaccard_max_df_bounds_candidates_and_preserves_results(spark):
+def test_jaccard_max_df_bounds_candidates_and_preserves_results(spark, monkeypatch):
     """A planted hot shingle shared by ALL docs must not blow up the
     candidate set when max_df is active, and jaccard values of
     surviving pairs are exact (verification uses full shingle sets)."""
@@ -362,21 +395,22 @@ def test_jaccard_max_df_bounds_candidates_and_preserves_results(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sh = dedup.with_shingles(df, "doc_id", "text", 3)
-    uncapped = dedup.jaccard_pairs(sh, threshold=0.3).toPandas()
-    capped = dedup.jaccard_pairs(sh, threshold=0.3, max_df=5).toPandas()
-    # the only >=0.3 pair is (100, 101); both paths find it with the
-    # exact jaccard despite the hot shingle being dropped from the index
-    assert set(map(tuple, capped[["id_a", "id_b"]].values)) == {(100, 101)}
-    u = uncapped.set_index(["id_a", "id_b"]).loc[(100, 101), "jaccard"]
-    c = capped.set_index(["id_a", "id_b"]).loc[(100, 101), "jaccard"]
-    assert abs(u - c) < 1e-12
-    # bounded fan-out: capped candidate generation never touches the
-    # hot shingle ⇒ no pair among the 30 filler docs even pre-threshold
-    capped_all = dedup.jaccard_pairs(sh, threshold=0.0, max_df=5).toPandas()
-    filler_pairs = capped_all[(capped_all.id_a < 100) & (capped_all.id_b < 100)]
-    assert len(filler_pairs) == 0
-    uncapped_all = dedup.jaccard_pairs(sh, threshold=0.0).toPandas()
-    assert len(uncapped_all[(uncapped_all.id_a < 100) & (uncapped_all.id_b < 100)]) == 30 * 29 / 2
+    for _ in index_gate_arms(monkeypatch):
+        uncapped = dedup.jaccard_pairs(sh, threshold=0.3).toPandas()
+        capped = dedup.jaccard_pairs(sh, threshold=0.3, max_df=5).toPandas()
+        # the only >=0.3 pair is (100, 101); both paths find it with the
+        # exact jaccard despite the hot shingle being dropped from the index
+        assert set(map(tuple, capped[["id_a", "id_b"]].values)) == {(100, 101)}
+        u = uncapped.set_index(["id_a", "id_b"]).loc[(100, 101), "jaccard"]
+        c = capped.set_index(["id_a", "id_b"]).loc[(100, 101), "jaccard"]
+        assert abs(u - c) < 1e-12
+        # bounded fan-out: capped candidate generation never touches the
+        # hot shingle ⇒ no pair among the 30 filler docs even pre-threshold
+        capped_all = dedup.jaccard_pairs(sh, threshold=0.0, max_df=5).toPandas()
+        filler_pairs = capped_all[(capped_all.id_a < 100) & (capped_all.id_b < 100)]
+        assert len(filler_pairs) == 0
+        uncapped_all = dedup.jaccard_pairs(sh, threshold=0.0).toPandas()
+        assert len(uncapped_all[(uncapped_all.id_a < 100) & (uncapped_all.id_b < 100)]) == 30 * 29 / 2
 
 
 def test_group_tests_rm_outliers(spark):
@@ -410,19 +444,20 @@ def test_group_tests_rm_outliers(spark):
     assert abs(dn.iloc[0]["mean_a"] - np.mean(base_a)) < 1e-12
 
 
-def test_dup_clusters_components(spark):
+def test_dup_clusters_components(spark, monkeypatch):
     """Hand-built graph: chain 1-2-3-4 (one component), pair (10,11),
     singleton-free (nodes only from edges). cluster_id = min id."""
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (7, 8), (8, 9), (9, 7)],
         "id_a long, id_b long",
     )
-    got = dedup.dup_clusters(pairs).toPandas().sort_values("doc_id")
     exp = {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 7, 10: 10, 11: 10}
-    assert dict(zip(got["doc_id"], got["cluster_id"])) == exp
+    for _ in cluster_gate_arms(monkeypatch):
+        got = dedup.dup_clusters(pairs).toPandas().sort_values("doc_id")
+        assert dict(zip(got["doc_id"], got["cluster_id"])) == exp
 
 
-def test_dup_clusters_string_ids_long_chain(spark):
+def test_dup_clusters_string_ids_long_chain(spark, monkeypatch):
     """String doc ids over a diameter-4 path: the fixpoint probe must
     count changed labels (a label SUM would be NULL for strings and
     silently stop after one propagation round, mislabeling d/e)."""
@@ -430,9 +465,10 @@ def test_dup_clusters_string_ids_long_chain(spark):
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")],
         "id_a string, id_b string",
     )
-    got = dedup.dup_clusters(pairs).toPandas().sort_values("doc_id")
     exp = {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
-    assert dict(zip(got["doc_id"], got["cluster_id"])) == exp
+    for _ in cluster_gate_arms(monkeypatch):
+        got = dedup.dup_clusters(pairs).toPandas().sort_values("doc_id")
+        assert dict(zip(got["doc_id"], got["cluster_id"])) == exp
 
 
 def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
@@ -449,6 +485,10 @@ def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
     import os
 
     assert os.listdir(tmp_path / "ckpt")  # files actually landed there
+    # a reliable checkpoint holds no block storage: nothing to free
+    from lbf_spark.util import free_local_checkpoint
+
+    assert free_local_checkpoint(pairs.checkpoint(eager=True)) is False
 
 
 def test_dup_clusters_nonconvergence_raises_or_warns(spark):

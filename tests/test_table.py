@@ -1004,40 +1004,49 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     keys, same [ts_min, ts_max, n_rows, hot] values, same top-8
     ordering under count ties (desc count, asc str(entity)), null
     entities counted in n_rows/ts bounds but never ranked."""
-    import pandas as pd
+    def both_paths(rows, schema, name, **kw):
+        df = spark.createDataFrame(rows, schema)
+        path = str(tmp_path / name)
+        kw.setdefault("ts_unit_day", 10_000)
+        snap = TBL.write_table(df, path, mode="overwrite", **kw)
+        files, data_dir = snap["added_files"], path + "/data"
+        local = TBL._file_ts_stats_local(data_dir, files)
+        assert local is not None and set(local) == set(files)
+        # threshold 0 disables the fast path: the Spark job runs
+        with monkeypatch.context() as m:
+            m.setattr(TBL, "STATS_DRIVER_BYTES", 0)
+            assert TBL._file_ts_stats_local(data_dir, files) is None
+            via_spark = TBL._file_ts_stats(spark, data_dir, files)
+        assert local == via_spark
+        # the committed snapshot used one of the two — also identical
+        assert snap["file_stats"] == via_spark
+        for st in local.values():
+            assert len(st[3]) <= 8
+        return local
 
+    # >8 string entities incl. ties and a null-entity group, spread over ts
     rows = []
-    # >8 entities incl. ties and a null-entity group, spread over ts
     for i, (ent, n) in enumerate(
         [("e01", 5), ("e02", 5), ("e03", 4), ("e04", 4), ("e05", 3),
          ("e06", 3), ("e07", 2), ("e08", 2), ("e09", 2), ("e10", 1),
          (None, 3)]
     ):
-        for j in range(n):
-            rows.append({"entity": ent, "ts": 1000 * i + j, "v": float(j)})
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    path = str(tmp_path / "stats_tbl")
-    snap = TBL.write_table(df, path, mode="overwrite", ts_unit_day=10_000)
-    files = snap["added_files"]
-    data_dir = path + "/data"
-
-    local = TBL._file_ts_stats_local(data_dir, files)
-    assert local is not None and set(local) == set(files)
-    # force the Spark job (threshold 0 disables the fast path)
-    monkeypatch.setenv("LBF_STATS_DRIVER_BYTES", "0")
-    via_spark = TBL._file_ts_stats_inner(spark, data_dir, files)
-    assert local == via_spark
-    # the committed snapshot used one of the two — also identical
-    assert snap["file_stats"] == via_spark
-    # hot ordering: ties broken by string order, capped at 8
-    for st in local.values():
-        assert len(st[3]) <= 8
-    # string-entity table exercises the str cast equivalence
-    rows2 = [{"entity": f"s{i % 3}", "ts": i, "v": 0.0} for i in range(30)]
-    df2 = spark.createDataFrame(pd.DataFrame(rows2))
-    path2 = str(tmp_path / "stats_tbl2")
-    snap2 = TBL.write_table(df2, path2, mode="overwrite", ts_unit_day=10_000)
-    monkeypatch.delenv("LBF_STATS_DRIVER_BYTES")
-    l2 = TBL._file_ts_stats_local(path2 + "/data", snap2["added_files"])
-    s2 = TBL._file_ts_stats_inner(spark, path2 + "/data", snap2["added_files"])
-    assert l2 == s2 == snap2["file_stats"]
+        rows += [(ent, 1000 * i + j, float(j)) for j in range(n)]
+    both_paths(rows, "entity string, ts long, v double", "stats_str")
+    rows2 = [(f"s{i % 3}", i, 0.0) for i in range(30)]
+    both_paths(rows2, "entity string, ts long, v double", "stats_str2")
+    # long entities: negative ids and count ties whose str() order
+    # differs from numeric order, so the top-8 cut decides on the
+    # str()-vs-cast('string') tie-break (one file: one bucket, one day)
+    rows3 = []
+    for i, (ent, n) in enumerate(
+        [(-12, 3), (-3, 3), (-1, 2), (0, 2), (2, 2), (7, 2), (10, 2),
+         (11, 2), (100, 2), (-100, 1), (None, 2)]
+    ):
+        rows3 += [(ent, 1000 * i + j, 0.0) for j in range(n)]
+    (hot,) = [st[3] for st in both_paths(
+        rows3, "entity long, ts long, v double", "stats_long",
+        n_buckets=1, ts_unit_day=100_000,
+    ).values()]
+    assert hot == {"-12": 3, "-3": 3, "-1": 2, "0": 2, "10": 2,
+                   "100": 2, "11": 2, "2": 2}
